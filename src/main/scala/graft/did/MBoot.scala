@@ -53,10 +53,13 @@ final case class MBootResult(
   * (`csdids/mboot.py:63-143`).
   *
   * The influence matrix lives as the sparse long-form `ifTable`
-  * (rowid, cell, inf). Two executions produce the same `bres`:
+  * (rowid, cell, inf). Two executions, which draw their signs
+  * differently:
   *
-  *  - driver path (n*K small): collect the sparse triplets and loop like
-  *    the reference (seeded, deterministic);
+  *  - driver path (at most [[MaxDriverEntries]] IF entries): collect the
+  *    sparse triplets and loop like the reference (seeded MersenneTwister
+  *    signs, deterministic). The loop itself is [[runArrays]], which
+  *    `Aggte`'s driver tier calls on its in-memory family sums;
   *  - distributed path: one `Aggregator` pass computes, per cell, the
   *    vector of B sign-weighted sums. Signs are a pure function
   *    `murmur3(rowid, b, seed)` so every cell sees the SAME draw for a
@@ -75,23 +78,33 @@ object MBoot {
     if ((f & 1) == 0) 1.0 else -1.0
   }
 
+  /** IF entries up to which the bootstrap runs on the driver; `Aggte`
+    * gates its driver tier on the same constant. */
+  val MaxDriverEntries: Long = 20L * 1000 * 1000
+
+  /** The size gate of the driver tiers: `entries` fit under `cap`. A cap
+    * of 0 always forces the distributed path, even for an empty table. */
+  private[did] def driverTier(entries: Long, cap: Long): Boolean =
+    cap > 0 && entries <= cap
+
   def run(ifTable: DataFrame, k: Int, n: Long, biters: Int, alp: Double,
-      seed: Long, maxDriverEntries: Long = 20L * 1000 * 1000): MBootResult = {
-    // fail at the configuration site, not lazily at first .cov access
-    require(biters >= 2,
-      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
-    val nnz = ifTable.count()
-    val outMat: Array[Array[Double]] =
-      if (nnz <= maxDriverEntries) driverBoot(ifTable, k, n, biters, seed)
-      else distributedBoot(ifTable, k, n, biters, seed)
-    finish(outMat, k, n, alp)
+      seed: Long, maxDriverEntries: Long = MaxDriverEntries): MBootResult = {
+    requireBiters(biters)
+    if (driverTier(ifTable.count(), maxDriverEntries))
+      driverBoot(ifTable, k, n, biters, alp, seed)
+    else finish(distributedBoot(ifTable, k, n, biters, seed), k, n, alp)
   }
 
-  /** Driver loop over collected sparse triplets — mirrors
-    * `multiplier_bootstrap` (`csdids/mboot.py:17-31`) with a seeded
-    * MersenneTwister instead of global numpy state. */
+  // fail at the configuration site, not lazily at first .cov access
+  private def requireBiters(biters: Int): Unit =
+    require(biters >= 2,
+      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
+
+  /** Driver path: collect the sparse triplets and resolve them to the
+    * primitive arrays [[runArrays]] loops over, units ranked in sorted
+    * rowid-string order. */
   private def driverBoot(ifTable: DataFrame, k: Int, n: Long, biters: Int,
-      seed: Long): Array[Array[Double]] = {
+      alp: Double, seed: Long): MBootResult = {
     val triplets = ifTable.collect().map { r =>
       (r.get(0).toString, r.getInt(1), r.getDouble(2))
     }
@@ -110,6 +123,19 @@ object MBoot {
       infs(t) = triplets(t)._3
       t += 1
     }
+    runArrays(uIx, cIx, infs, units.length, k, n, biters, alp, seed)
+  }
+
+  /** Driver loop over sparse entries `(uIx(t), cIx(t), infs(t))`, units
+    * ranked 0 until `nU` — mirrors `multiplier_bootstrap`
+    * (`csdids/mboot.py:17-31`) with a seeded MersenneTwister instead of
+    * global numpy state. Each draw accumulates its entries in array
+    * order, so the result is a pure function of the arrays. */
+  private[did] def runArrays(uIx: Array[Int], cIx: Array[Int],
+      infs: Array[Double], nU: Int, k: Int, n: Long, biters: Int,
+      alp: Double, seed: Long): MBootResult = {
+    requireBiters(biters)
+    val nnz = infs.length
     // the MT draw stream is sequential BY CONTRACT (b-major over
     // units — the fixture replays it draw for draw), but the
     // contraction is embarrassingly parallel over b: pre-draw every
@@ -120,7 +146,6 @@ object MBoot {
     // to the sequential loop — r14: the warm bootstrap pass at 10x
     // was serialized on one core (7.5 s) while 31 sat idle.
     val rng = new MersenneTwister(seed)
-    val nU = units.length
     val signs = new java.util.BitSet(biters * nU)
     var b = 0
     var idx = 0
@@ -145,10 +170,8 @@ object MBoot {
       var j = 0
       while (j < k) { out(bb)(j) = acc(j) / n; j += 1 }
     }
-    out
+    finish(out, k, n, alp)
   }
-
-  private final case class BootBuf(sums: Array[Double])
 
   /** Distributed path: per cell, accumulate B sign-weighted sums in one
     * shuffle-light pass (K groups, each carrying a length-B buffer). */
@@ -231,8 +254,7 @@ object MBoot {
     * explode+groupBy pass once and feed it to each. */
   def finishFromMd5Draws(draws: DataFrame, k: Int, n: Long, biters: Int,
       alp: Double): MBootResult = {
-    require(biters >= 2,
-      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
+    requireBiters(biters)
     val sqrtN = math.sqrt(n.toDouble)
     val out = Array.ofDim[Double](biters, k)
     draws.collect().foreach { r =>

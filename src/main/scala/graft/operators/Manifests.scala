@@ -133,8 +133,13 @@ object Manifests {
       keyCol: String, path: String, fpp: Double = 0.01,
       prefixLen: Int = 2): Unit = {
     require(prefixLen >= 1 && prefixLen <= 4, s"bad prefixLen: $prefixLen")
-    val m = TrackedCaches.persist(
-      spark.read.parquet(path).select(col("key_md5")))
+    // only frames persisted here are released after the write; a cache
+    // the caller already holds on the same plan stays theirs
+    val owned = collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persistOwned(df: DataFrame): DataFrame =
+      if (TrackedCaches.isCached(df)) df
+      else { val p = TrackedCaches.persist(df); owned += p; p }
+    val m = persistOwned(spark.read.parquet(path).select(col("key_md5")))
     val n = math.max(m.count(), 1L)
     val bloom = m.stat.bloomFilter("key_md5", n, fpp)
     // persisted (r15): BOTH split branches (the definitely-new filter
@@ -142,15 +147,21 @@ object Manifests {
     // batch's md5 pass + distinct would run once per branch, and the
     // batch itself may be a computed pipeline (the q_manifest_compact
     // steady-state feeds the bloom-filtered fresh set back in)
-    val keys = TrackedCaches.persist(
+    val keys = persistOwned(
       batch.select(keyMd5(col(keyCol)).as("key_md5")).distinct())
     val defNew = keys.filter(!bloomMightContain(bloom, col("key_md5")))
     val maybe = keys.filter(bloomMightContain(bloom, col("key_md5")))
       .join(m, Seq("key_md5"), "left_anti")
-    defNew.unionByName(maybe)
-      .withColumn("kp", substring(col("key_md5"), 1, prefixLen))
-      .repartition(col("kp"))
-      .write.mode("append").partitionBy("kp").parquet(path)
+    try
+      defNew.unionByName(maybe)
+        .withColumn("kp", substring(col("key_md5"), 1, prefixLen))
+        .repartition(col("kp"))
+        .write.mode("append").partitionBy("kp").parquet(path)
+    finally {
+      // the pre-append snapshot must not serve a later read of `path`
+      owned.foreach(_.unpersist())
+      spark.catalog.refreshByPath(path)
+    }
   }
 
   /** Periodic maintenance: dedupe + small-file merge of the

@@ -56,6 +56,15 @@ class MBootSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage.contains("biters"))
   }
 
+  test("driver-tier gate: a cap of 0 refuses the driver tier, even empty") {
+    assert(!MBoot.driverTier(0L, 0L))
+    assert(!MBoot.driverTier(5L, 0L))
+    assert(MBoot.driverTier(0L, 1L))
+    assert(MBoot.driverTier(5L, 5L))
+    assert(!MBoot.driverTier(6L, 5L))
+    assert(MBoot.driverTier(MBoot.MaxDriverEntries, MBoot.MaxDriverEntries))
+  }
+
   test("distributed path agrees distributionally with driver path") {
     val driver = MBoot.run(fit.ifTable, fit.cells.length, fit.pp.n,
       999, 0.05, 5L)

@@ -146,10 +146,33 @@ class Wave54Spec extends AnyFunSuite with Matchers with SparkSpec {
     val keys = spark.read.parquet(p).select("key_md5")
     keys.count() shouldBe 70
     keys.distinct().count() shouldBe 70
+    // read before the compaction swap: `keys` lists the pre-swap files
+    val appended = keys.collect().map(_.getString(0)).sorted
     Manifests.compactSeenManifest(spark, p)
     files().size should be < after.size
     spark.read.parquet(p).select("key_md5").collect().map(_.getString(0))
-      .sorted shouldBe keys.collect().map(_.getString(0)).sorted
+      .sorted shouldBe appended
+  }
+
+  test("manifest: sequential overlapping appends in one session stay " +
+    "duplicate-free") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("wave54-manifest-seq").toString
+    val p = s"$dir/seen"
+    Manifests.writeSeenManifestPartitioned(
+      (1 to 40).map(i => s"doc-$i").toDF("k"), "k", p)
+    // the second batch overlaps keys only the first append added: a
+    // stale cached read of the manifest would append 60..70 again
+    Manifests.appendSeenManifest(spark,
+      (30 to 70).map(i => s"doc-$i").toDF("k"), "k", p)
+    Manifests.appendSeenManifest(spark,
+      (60 to 90).map(i => s"doc-$i").toDF("k"), "k", p)
+    // the append released its read of the manifest instead of leaving
+    // a cache of it behind
+    val keys = spark.read.parquet(p).select("key_md5")
+    TrackedCaches.isCached(keys) shouldBe false
+    keys.count() shouldBe 90
+    keys.distinct().count() shouldBe 90
   }
 
   test("bloom sidecar: persisted probe filters exactly like the " +
