@@ -121,10 +121,9 @@ object AttGt {
     val cells = buildCells(pp, basePeriod)
     // the two distributed paths fold the SE aggregation into their
     // IF-materializing action and return the per-cell sum of squares
-    val fitres: (Array[Double], Array[Int], Array[Boolean], DataFrame,
-        Option[Array[Double]]) =
+    val fitres: DistributedFit.Result =
       if (pp.panel && customPanel.isEmpty &&
-          DistributedPanel.supports(estMethod, pp.config.covariates.length))
+          DistributedFit.supports(estMethod, pp.config.covariates.length))
         DistributedPanel.fit(pp, cells, estMethod, panelWide(pp, cells))
       else if (pp.panel) {
         val r = fitPanelCollect(pp, cells, estMethod, customPanel,
@@ -134,7 +133,7 @@ object AttGt {
         val r = fitRcDistributed(pp, cells, estMethod)
         (r._1, r._2, r._3, r._4, None)
       } else if (customRc.isEmpty &&
-          DistributedRc.supports(estMethod, pp.config.covariates.length))
+          DistributedFit.supports(estMethod, pp.config.covariates.length))
         // covariate scale path: Gram/moment aggregations + broadcast
         // constants, nothing O(rows) at the driver (DistributedRc)
         DistributedRc.fit(pp, cells, estMethod, longForm(pp, cells))
@@ -241,22 +240,31 @@ object AttGt {
     * implement the intended semantics (SURVEY.md §7.5). */
   private def longForm(pp: PreprocessedPanel, cells: Vector[CellDef])
       : DataFrame = {
-    val spark = pp.df.sparkSession
-    import spark.implicits._
-    val grid = cells.filterNot(_.zeroCell)
-      .map(c => (c.idx, c.g, c.tn, c.tpre, c.n2val))
-      .toDF("cell", "cg", "ctn", "ctpre", "cn2")
-    val nyt = pp.config.controlGroup == "notyettreated"
-    val cCond: Column =
-      if (nyt) (col("gg") === 0.0) ||
-        ((col("gg") > col("cn2")) && (col("gg") =!= col("cg")))
-      else col("gg") === 0.0
+    val (grid, cCond) = gridAndControl(pp, cells)
     val eligible =
       ((col("tt") === col("ctn")) || (col("tt") === col("ctpre"))) &&
         ((col("gg") === col("cg")) || cCond)
     pp.df.join(broadcast(grid), eligible)
       .withColumn("d", (col("gg") === col("cg")).cast("int"))
       .withColumn("pst", (col("tt") === col("ctn")).cast("int"))
+  }
+
+  /** The estimated cells' grid (cell, cg, ctn, ctpre, cn2), broadcast
+    * against the panel by both the long and the wide cell frames, and
+    * the control predicate over it: never treated, plus, with
+    * `notyettreated`, the other cohorts first treated after `cn2`. */
+  private def gridAndControl(pp: PreprocessedPanel, cells: Vector[CellDef])
+      : (DataFrame, Column) = {
+    val spark = pp.df.sparkSession
+    import spark.implicits._
+    val grid = cells.filterNot(_.zeroCell)
+      .map(c => (c.idx, c.g, c.tn, c.tpre, c.n2val))
+      .toDF("cell", "cg", "ctn", "ctpre", "cn2")
+    val cCond: Column =
+      if (pp.config.controlGroup == "notyettreated") (col("gg") === 0.0) ||
+        ((col("gg") > col("cn2")) && (col("gg") =!= col("cg")))
+      else col("gg") === 0.0
+    (grid, cCond)
   }
 
   /** Distributed intercept-only path: per-cell sufficient statistics, then
@@ -479,17 +487,8 @@ object AttGt {
     * (SURVEY.md §2.3). Columns: cell, rid, y1, y0, gg, w1, cg, covs. */
   private def panelWide(pp: PreprocessedPanel, cells: Vector[CellDef])
       : DataFrame = {
-    val spark = pp.df.sparkSession
-    import spark.implicits._
     val covNames = pp.config.covariates
-    val nyt = pp.config.controlGroup == "notyettreated"
-    val grid = cells.filterNot(_.zeroCell)
-      .map(c => (c.idx, c.g, c.tn, c.tpre, c.n2val))
-      .toDF("cell", "cg", "ctn", "ctpre", "cn2")
-    val cCond: Column =
-      if (nyt) (col("gg") === 0.0) ||
-        ((col("gg") > col("cn2")) && (col("gg") =!= col("cg")))
-      else col("gg") === 0.0
+    val (grid, cCond) = gridAndControl(pp, cells)
     pp.df.join(broadcast(grid),
         (col("tt") === col("ctn")) || (col("tt") === col("ctpre")))
       .filter((col("gg") === col("cg")) || cCond)

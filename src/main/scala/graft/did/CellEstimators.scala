@@ -58,7 +58,7 @@ object CellEstimators {
   private[did] def logisticIrls(
       x: DenseMatrix[Double], d: DenseVector[Double], w: DenseVector[Double],
       maxIter: Int = 100,
-      tol: Double = DistributedRc.IrlsTol): DenseVector[Double] = {
+      tol: Double = DistributedFit.IrlsTol): DenseVector[Double] = {
     val p = x.cols
     var beta = DenseVector.zeros[Double](p)
     var iter = 0

@@ -1,12 +1,14 @@
 package graft.did
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import breeze.linalg.{inv, DenseMatrix, DenseVector}
 
 /** Distributed covariate estimation for the balanced-panel regime —
-  * companion to [[DistributedRc]] (see its scaladoc for the design).
+  * companion to [[DistributedRc]] (see its scaladoc for the design),
+  * sharing its Newton-IRLS propensity core, pass-0 readers and IF-table
+  * finish ([[DistributedFit]]).
   * Operates on the wide per-(cell, unit) frame (y1/y0 pivot) built in
   * AttGt: pass 0 carries the counts PLUS every gamma-independent block
   * (control Δy regression Grams and the first IRLS Newton step at
@@ -18,17 +20,12 @@ import breeze.linalg.{inv, DenseMatrix, DenseVector}
   * [[CellEstimators.RegDidPanel]] / [[CellEstimators.IpwDidPanel]] is
   * asserted in DistributedRcSpec. */
 private[did] object DistributedPanel {
-
-  def supports(estMethod: String, p: Int): Boolean =
-    DistributedRc.supports(estMethod, p)
+  import DistributedFit._
 
   /** `wide` columns: cell, rid, y1, y0, gg, w1, cg, <covariates>. */
   def fit(pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
-      wide: DataFrame)
-      : (Array[Double], Array[Int], Array[Boolean], DataFrame,
-         Option[Array[Double]]) = {
+      wide: DataFrame): Result = {
     val spark = pp.df.sparkSession
-    import spark.implicits._
     val covs = pp.config.covariates
     val p = covs.length
     val nCells = cells.length
@@ -44,6 +41,7 @@ private[did] object DistributedPanel {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     def xj(j: Int): Column = col(covs(j))
+    def dotArr(arr: Column): Column = DistributedFit.dotArr(covs, arr)
 
     // ---- pass 0: counts, treated/control presence, mean weight, AND
     // the gamma-independent Gram/moment blocks (control Δy regression +
@@ -61,8 +59,7 @@ private[did] object DistributedPanel {
       (0 until p).map(j => sum(wC * xj(j) * col("dy")).as(s"gyC_$j")) ++
       (0 until p).map(j => sum(wT * xj(j)).as(s"gvT_$j")) ++
       (0 until p).map(j => sum(wC * xj(j)).as(s"gvC_$j"))
-    val p0 = lf.groupBy("cell").agg(p0Aggs.head, p0Aggs.tail: _*)
-      .collect().map(r => r.getInt(0) -> r).toMap
+    val p0 = new CellRows(perCell(lf, p0Aggs), p)
     // Every remaining pass reduces to K = #cells rows; a handful of
     // reduce partitions is right at any scale (map-side partial aggs do
     // the work; AQE would coalesce, but it's off here). Set only AFTER
@@ -72,108 +69,26 @@ private[did] object DistributedPanel {
     // needs data-sized partitioning), by the finally on exceptions.
     val shuffleNarrow = new ShuffleNarrow(spark, 4)
     try {
-    def p0d(i: Int, name: String): Double =
-      p0(i).getDouble(p0(i).fieldIndex(name))
-    def p0Gram(i: Int, prefix: String): DenseMatrix[Double] = {
-      val m = DenseMatrix.zeros[Double](p, p)
-      for (j <- 0 until p; k <- j until p) {
-        val v = p0d(i, s"${prefix}_${j}_$k"); m(j, k) = v; m(k, j) = v
-      }
-      m
-    }
-    def p0Vec(i: Int, prefix: String): DenseVector[Double] =
-      DenseVector.tabulate(p)(j => p0d(i, s"${prefix}_$j"))
 
     val att = Array.fill(nCells)(0.0)
     val post = Array.fill(nCells)(0)
     val skipped = Array.fill(nCells)(false)
     val n1 = Array.fill(nCells)(0L)
     val meanW = Array.fill(nCells)(1.0)
-    val live = cells.filterNot(_.zeroCell).map(_.idx).filter { i =>
-      p0.get(i) match {
-        case None => skipped(i) = true; false
-        case Some(r) =>
-          n1(i) = r.getLong(1)
-          meanW(i) = r.getDouble(2) / r.getLong(1)
-          val bad = r.getDouble(3) == 0.0 || r.getDouble(4) == 0.0
-          if (bad) skipped(i) = true
-          !bad
-      }
-    }
-    if (live.isEmpty) {
-      lf.unpersist()
-      shuffleNarrow.restore()
-      return (att, post, skipped,
-        Seq.empty[(String, Int, Double)].toDF("rowid", "cell", "inf"),
-        Some(Array.fill(nCells)(0.0)))
-    }
+    // a cell needs both treated and control units
+    val live = p0.liveCells(cells, skipped, n1, meanW)(r =>
+      !(r.getDouble(3) == 0.0 || r.getDouble(4) == 0.0))
+    if (live.isEmpty) return noLiveCells(lf, shuffleNarrow, att, post, skipped)
 
-    // per-cell constants join as a broadcast LocalRelation (CellConsts:
-    // no collect job per pass, one hash probe per row)
-    def dotArr(arr: Column): Column =
-      (0 until p).map(j => xj(j) * element_at(arr, j + 1)).reduce(_ + _)
-
-    // ---- IRLS propensity (dr, ipw) ------------------------------------
-    val gamma = Array.fill(nCells)(DenseVector.zeros[Double](p))
-    var psHessInv: Map[Int, DenseMatrix[Double]] = Map.empty
-    if (estMethod != "reg") {
-      var iter = 1 // first Newton step folded into pass 0 (gamma=0)
-      var lastHess: Map[Int, DenseMatrix[Double]] = Map.empty
-      var pending: Seq[Int] = live
-      locally {
-        val hb = Map.newBuilder[Int, DenseMatrix[Double]]
-        val still = Seq.newBuilder[Int]
-        live.foreach { i =>
-          val mw = meanW(i)
-          val h = (p0Gram(i, "gxT") + p0Gram(i, "gxC")) *:* (0.25 / mw)
-          for (j <- 0 until p) h(j, j) = math.max(h(j, j), 1e-12)
-          val g = (p0Vec(i, "gvT") - ((p0Vec(i, "gvT") + p0Vec(i, "gvC"))
-            *:* 0.5)) /:/ mw
-          val step = h \ g
-          gamma(i) = step
-          hb += i -> h
-          if (breeze.linalg.max(step.map(math.abs)) > DistributedRc.IrlsTol) still += i
-        }
-        lastHess = hb.result()
-        pending = still.result()
-      }
-      while (iter < 50 && pending.nonEmpty) {
-        val iw = col("w1") / col("mw")
-        val mu = lit(1.0) / (lit(1.0) + exp(-dotArr(col("gam"))))
-        val s = iw * mu * (lit(1.0) - mu)
-        val z = iw * (col("dd") - mu)
-        val aggs =
-          (for (j <- 0 until p; k <- j until p)
-            yield sum(s * xj(j) * xj(k)).as(s"h_${j}_$k")) ++
-          (0 until p).map(j => sum(z * xj(j)).as(s"g_$j"))
-        val rows = CellConsts.withConsts(lf, pending, Seq(
-            "mw" -> (i => meanW(i)),
-            "gam" -> (i => gamma(i).toArray.toSeq)))
-          .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-          .collect().map(r => r.getInt(0) -> r).toMap
-        val hb = Map.newBuilder[Int, DenseMatrix[Double]]
-        val still = Seq.newBuilder[Int]
-        pending.foreach { i =>
-          val r = rows(i)
-          val h = DenseMatrix.zeros[Double](p, p)
-          var idx = 1
-          for (j <- 0 until p; k <- j until p) {
-            val v = if (j == k) math.max(r.getDouble(idx), 1e-12)
-              else r.getDouble(idx)
-            h(j, k) = v; h(k, j) = v; idx += 1
-          }
-          val g = DenseVector.tabulate(p)(j => r.getDouble(idx + j))
-          val step = h \ g
-          gamma(i) = gamma(i) + step
-          hb += i -> h
-          if (breeze.linalg.max(step.map(math.abs)) > DistributedRc.IrlsTol) still += i
-        }
-        lastHess = lastHess ++ hb.result()
-        pending = still.result()
-        iter += 1
-      }
-      psHessInv = lastHess.map { case (i, h) => i -> inv(h /:/ n1(i).toDouble) }
-    }
+    // ---- IRLS propensity (dr, ipw; reg fits none), first Newton step
+    // from pass 0
+    val (gamma, psHessInv) = propensity(lf, covs,
+      if (estMethod == "reg") Nil else live, meanW, n1, { i =>
+        val mw = meanW(i)
+        val h = (p0.gram(i, "gxT") + p0.gram(i, "gxC")) *:* (0.25 / mw)
+        (h, (p0.vec(i, "gvT") - ((p0.vec(i, "gvT") + p0.vec(i, "gvC"))
+          *:* 0.5)) /:/ mw)
+      })
 
     // ---- control Δy regression, from pass-0 Grams (no extra scan;
     // the iw = w1/mw scaling cancels in the solve)
@@ -181,8 +96,8 @@ private[did] object DistributedPanel {
     val xtxInvC = Array.fill(nCells)(DenseMatrix.zeros[Double](p, p))
     live.foreach { i =>
       val mw = meanW(i)
-      val xtx = p0Gram(i, "gxC") *:* (1.0 / mw)
-      val xty = p0Vec(i, "gyC") /:/ mw
+      val xtx = p0.gram(i, "gxC") *:* (1.0 / mw)
+      val xty = p0.vec(i, "gyC") /:/ mw
       bDelta(i) = xtx \ xty
       xtxInvC(i) = inv(xtx /:/ n1(i).toDouble)
     }
@@ -219,9 +134,7 @@ private[did] object DistributedPanel {
         sum(wTreat * xj(j)).as(s"mT_$j"),
         sum(wCont * xj(j)).as(s"mC_$j"),
         sum(wCont * contTarget * xj(j)).as(s"mCt_$j")))
-    val momRows = CellConsts.withConsts(lf, live, momConsts)
-      .groupBy("cell").agg(momAggs.head, momAggs.tail: _*)
-      .collect().map(r => r.getInt(0) -> r).toMap
+    val momRows = perCell(CellConsts.withConsts(lf, live, momConsts), momAggs)
 
     final case class K(etaT: Double, etaC: Double, mwT: Double, mwC: Double,
         uWols: Seq[Double], uPs: Seq[Double])
@@ -273,23 +186,15 @@ private[did] object DistributedPanel {
       case "ipw" => psScore * dotArr(col("uPs"))
       case _ => wolsScore * dotArr(col("uWols"))
     }
-    // Materialize off the cached lf before dropping it (see DistributedRc);
-    // the materializing action doubles as the analytic-SE aggregation.
     // (rowid, cell) is UNIQUE here — panelWide already pivoted to one
     // row per (unit, cell) — so the IF table is a pure projection; a
     // groupBy(rowid, cell) would be an identity aggregation costing a
-    // full O(rows) shuffle.
-    val ifRows = CellConsts.withConsts(lf, live, ifConsts)
-      .select(col("rowid"), col("cell"),
-        ((infBase + infNuis) * col("scale")).as("inf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seSS = Array.fill(nCells)(0.0)
-    ifRows.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
-      .collect().foreach(r => seSS(r.getInt(0)) = r.getDouble(1))
-    lf.unpersist()
-    shuffleNarrow.restore()
-
-    (att, post, skipped, ifRows, Some(seSS))
+    // full O(rows) shuffle. Its SE sums still run on the narrow
+    // partitioning, restored by finishIf.
+    finishIf(lf, shuffleNarrow, att, post, skipped,
+      CellConsts.withConsts(lf, live, ifConsts)
+        .select(col("rowid"), col("cell"),
+          ((infBase + infNuis) * col("scale")).as("inf")))
     } finally shuffleNarrow.restore() // no-op unless an exception skipped it
   }
 }

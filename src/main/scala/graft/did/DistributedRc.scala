@@ -1,6 +1,6 @@
 package graft.did
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import breeze.linalg.{inv, DenseMatrix, DenseVector}
@@ -12,11 +12,12 @@ import breeze.linalg.{inv, DenseMatrix, DenseVector}
   * driver — fine for parity, impossible at scale. Here NOTHING of size
   * O(rows) ever reaches the driver:
   *
-  *  - per-cell logistic propensity by IRLS where each Newton step is ONE
-  *    `groupBy(cell)` pass computing the p x p Hessian and p-gradient as
-  *    sum-of-product columns (all cells step together; p = #covariates
-  *    is small, so p(p+1)/2 + p agg columns are cheap). The FIRST step
-  *    needs no gamma (mu = 1/2) and folds into pass 0;
+  *  - per-cell logistic propensity by the Newton-IRLS core shared with
+  *    [[DistributedPanel]] ([[DistributedFit.propensity]]): each Newton
+  *    step is ONE `groupBy(cell)` pass computing the p x p Hessian and
+  *    p-gradient as sum-of-product columns (all cells step together;
+  *    p = #covariates is small, so p(p+1)/2 + p agg columns are cheap).
+  *    The FIRST step needs no gamma (mu = 1/2) and folds into pass 0;
   *  - the four (D, post) outcome regressions from pass-0 Gram blocks,
   *    solved driver-side (p x p normal equations per cell, no extra
   *    scan — the iw scaling cancels in the solve);
@@ -26,7 +27,9 @@ import breeze.linalg.{inv, DenseMatrix, DenseVector}
   *  - the per-row influence function as a closed-form column expression
   *    over the covariates and broadcast per-cell constant vectors
   *    (asymptotic linear representations contract to row-dot-constant
-  *    products), aggregated straight into the sparse IF table.
+  *    products), aggregated straight into the sparse IF table, whose
+  *    persist and per-cell SE sums [[DistributedFit.finishIf]] shares
+  *    with the panel fit.
   *
   * Total cost: ~(IRLS iters + 3) scans of the cell-expanded frame, each
   * shuffling only K x p^2 numbers. Formulas mirror
@@ -35,44 +38,11 @@ import breeze.linalg.{inv, DenseMatrix, DenseVector}
   * DistributedRcSpec to 1e-8).
   */
 private[did] object DistributedRc {
-
-  private val MaxP = 16
-
-  def supports(estMethod: String, p: Int): Boolean =
-    Set("dr", "reg", "ipw").contains(estMethod) && p <= MaxP
-
-  // profiling aid, active only under SPARK_GRAFT_DEBUG
-  private val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
-  private def timed[T](name: String)(f: => T): T =
-    if (!debug) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[rc] $name%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  // ---------------------------------------------------------------------
-
-  /** IRLS stops when the just-APPLIED Newton step is below this. Newton
-    * is quadratically convergent here, so the step criterion overshoots:
-    * 1e-10 lands gamma at machine precision (the final pass's steps
-    * measure 1e-16..1e-18). It costs one scan versus the earlier 1e-7,
-    * but the tight stop is what lets `q_att_gt_cov`'s analytic SE be
-    * pinned at 6dp against the INDEPENDENT numpy fixture
-    * (scripts/gen_attgt_cov_fixture.py): high-leverage odds weights
-    * amplify residual gamma error ~1e-14 into ~5e-5 absolute SE wiggle
-    * at 1e-7, which straddled the 6dp round on 3 of 54 fixture cells.
-    * Must match [[CellEstimators.logisticIrls]]'s default so the
-    * distributed and collect paths run identical iterates. */
-  private[did] val IrlsTol = 1e-10
+  import DistributedFit._
 
   def fit(pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
-      lf0: DataFrame)
-      : (Array[Double], Array[Int], Array[Boolean], DataFrame,
-         Option[Array[Double]]) = {
+      lf0: DataFrame): Result = {
     val spark = pp.df.sparkSession
-    import spark.implicits._
     val covs = pp.config.covariates
     val p = covs.length
     val nCells = cells.length
@@ -99,10 +69,9 @@ private[did] object DistributedRc {
       col("d").cast("double").as("dd"),
       col("pst").cast("double").as("pp")) ++ covs.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (debug) System.err.println(s"[rc] lf rows: ${timed("lf-mat")(lf.count())} " +
-      s"partitions: ${lf.rdd.getNumPartitions}")
 
     def xj(j: Int): Column = col(covs(j))
+    def dotArr(arr: Column): Column = DistributedFit.dotArr(covs, arr)
 
     // ---- pass 0: counts, bucket counts, mean weight, AND the four
     // (D,post)-bucket Gram/moment blocks. The WLS normal equations are
@@ -126,137 +95,37 @@ private[did] object DistributedRc {
         (0 until p).map(j =>
           sum(ind(dv, pv) * xj(j)).as(s"gv_${nm}_$j"))
       }
-    val p0 = timed("pass0")(
-      lf.groupBy("cell").agg(bucketAggs.head, bucketAggs.tail: _*)
-        .collect().map(r => r.getInt(0) -> r).toMap)
-    def p0d(i: Int, name: String): Double =
-      p0(i).getDouble(p0(i).fieldIndex(name))
-    def p0Gram(i: Int, nm: String): DenseMatrix[Double] = {
-      val m = DenseMatrix.zeros[Double](p, p)
-      for (j <- 0 until p; k <- j until p) {
-        val v = p0d(i, s"gx_${nm}_${j}_$k"); m(j, k) = v; m(k, j) = v
-      }
-      m
-    }
-    def p0Vec(i: Int, prefix: String, nm: String): DenseVector[Double] =
-      DenseVector.tabulate(p)(j => p0d(i, s"${prefix}_${nm}_$j"))
+    val p0 = new CellRows(perCell(lf, bucketAggs), p)
 
     val att = Array.fill(nCells)(0.0)
     val post = Array.fill(nCells)(0)
     val skipped = Array.fill(nCells)(false)
     val nC = Array.fill(nCells)(0L)
     val meanW = Array.fill(nCells)(1.0)
-    val live = cells.filterNot(_.zeroCell).map(_.idx).filter { i =>
-      p0.get(i) match {
-        case None => skipped(i) = true; false
-        case Some(r) =>
-          nC(i) = r.getLong(1)
-          meanW(i) = r.getDouble(2) / r.getLong(1)
-          val degenerate = (3 to 6).exists(k => r.getLong(k) == 0L)
-          if (degenerate) skipped(i) = true
-          !degenerate
-      }
-    }
+    // degenerate cells miss one of the four (D,post) buckets
+    val live = p0.liveCells(cells, skipped, nC, meanW)(r =>
+      !(3 to 6).exists(k => r.getLong(k) == 0L))
 
-    if (live.isEmpty) {
-      lf.unpersist()
-      shuffleNarrow.restore()
-      val empty = Seq.empty[(String, Int, Double)]
-        .toDF("rowid", "cell", "inf")
-      return (att, post, skipped, empty, Some(Array.fill(nCells)(0.0)))
-    }
+    if (live.isEmpty) return noLiveCells(lf, shuffleNarrow, att, post, skipped)
 
-    // per-cell constants join as a broadcast LocalRelation (CellConsts:
-    // no collect job per pass, one hash probe per row); `iw` is the
-    // mean-normalized weight
-
-    def dotArr(arr: Column): Column =
-      (0 until p).map(j => xj(j) * element_at(arr, j + 1)).reduce(_ + _)
-
-    // ---- IRLS for the propensity (dr, ipw only) -----------------------
-    val gamma = Array.fill(nCells)(DenseVector.zeros[Double](p))
-    var psHessInv: Map[Int, DenseMatrix[Double]] = Map.empty
-    if (estMethod != "reg") {
-      var iter = 1 // the first Newton step was folded into pass 0
-      var lastHess: Map[Int, DenseMatrix[Double]] = Map.empty
-      var pending: Seq[Int] = live
-      // First Newton step from pass-0 moments: at gamma=0, mu=1/2, so
-      // H = (1/4) sum_buckets Gram / mw and grad_j =
-      // (sum_{treated} gv_j - (1/2) sum_all gv_j) / mw.
-      locally {
-        val hb = Map.newBuilder[Int, DenseMatrix[Double]]
-        val still = Seq.newBuilder[Int]
-        live.foreach { i =>
-          val mw = meanW(i)
-          val h = (subsP0.map { case (nm, _, _) => p0Gram(i, nm) }
-            .reduce(_ + _)) *:* (0.25 / mw)
-          for (j <- 0 until p)
-            h(j, j) = math.max(h(j, j), 1e-12)
-          val gvAll = subsP0.map { case (nm, _, _) => p0Vec(i, "gv", nm) }
-            .reduce(_ + _)
-          val gvTreat = p0Vec(i, "gv", "T1") + p0Vec(i, "gv", "T0")
-          val g = (gvTreat - (gvAll *:* 0.5)) /:/ mw
-          val step = h \ g
-          gamma(i) = step
-          hb += i -> h
-          if (breeze.linalg.max(step.map(math.abs)) > IrlsTol) still += i
-        }
-        lastHess = hb.result()
-        pending = still.result()
-      }
-      // remaining Newton passes scan only the straggler cells' rows
-      while (iter < 50 && pending.nonEmpty) {
-        val iw = col("w1") / col("mw")
-        val mu = lit(1.0) / (lit(1.0) + exp(-dotArr(col("gam"))))
-        val s = iw * mu * (lit(1.0) - mu)
-        val z = iw * (col("dd") - mu)
-        val aggs =
-          (for (j <- 0 until p; k <- j until p)
-            yield sum(s * xj(j) * xj(k)).as(s"h_${j}_$k")) ++
-          (0 until p).map(j => sum(z * xj(j)).as(s"g_$j"))
-        val rows = timed(s"irls#$iter")(
-          CellConsts.withConsts(lf, pending, Seq(
-              "mw" -> (i => meanW(i)),
-              "gam" -> (i => gamma(i).toArray.toSeq)))
-            .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-            .collect().map(r => r.getInt(0) -> r).toMap)
-        val hessB = Map.newBuilder[Int, DenseMatrix[Double]]
-        val still = Seq.newBuilder[Int]
-        pending.foreach { i =>
-          val r = rows(i)
-          val h = DenseMatrix.zeros[Double](p, p)
-          var idx = 1
-          for (j <- 0 until p; k <- j until p) {
-            val v = math.max(r.getDouble(idx), if (j == k) 1e-12 else r.getDouble(idx))
-            h(j, k) = v; h(k, j) = v; idx += 1
-          }
-          val g = DenseVector.tabulate(p)(j => r.getDouble(idx + j))
-          val step = h \ g
-          gamma(i) = gamma(i) + step
-          hessB += i -> h
-          val sz = breeze.linalg.max(step.map(math.abs))
-          if (debug) System.err.println(f"[irls] cell $i step $sz%.3e")
-          if (sz > IrlsTol) still += i
-        }
-        lastHess = lastHess ++ hessB.result()
-        pending = still.result()
-        iter += 1
-        if (debug)
-          System.err.println(
-            s"[irls] pass $iter: ${pending.size}/${live.size} cells pending")
-      }
-      if (debug)
-        System.err.println(s"[irls] converged after $iter Newton passes " +
-          s"(${live.size} cells, p=$p)")
-      psHessInv = lastHess.map { case (i, h) =>
-        i -> inv(h /:/ nC(i).toDouble)
-      }
-    }
+    // ---- IRLS for the propensity (dr, ipw only; reg fits none). The
+    // first Newton step comes from pass-0 moments: at gamma=0, mu=1/2, so
+    // H = (1/4) sum_buckets Gram / mw and grad_j =
+    // (sum_{treated} gv_j - (1/2) sum_all gv_j) / mw.
+    val (gamma, psHessInv) = propensity(lf, covs,
+      if (estMethod == "reg") Nil else live, meanW, nC, { i =>
+        val mw = meanW(i)
+        val h = (subsP0.map { case (nm, _, _) => p0.gram(i, s"gx_$nm") }
+          .reduce(_ + _)) *:* (0.25 / mw)
+        val gvAll = subsP0.map { case (nm, _, _) => p0.vec(i, s"gv_$nm") }
+          .reduce(_ + _)
+        val gvTreat = p0.vec(i, "gv_T1") + p0.vec(i, "gv_T0")
+        (h, (gvTreat - (gvAll *:* 0.5)) /:/ mw)
+      })
 
     // ---- WLS fits for the four (D,post) subsamples, from pass-0 Grams
     // (no extra scan; the iw = w1/mw scaling cancels in the solve and
     // is applied explicitly for the inverse's nC normalization)
-    val subs = subsP0
     val beta = Array.fill(nCells)(Map.empty[String, DenseVector[Double]])
     val xtxInvSub =
       Array.fill(nCells)(Map.empty[String, DenseMatrix[Double]])
@@ -264,9 +133,9 @@ private[did] object DistributedRc {
       val mw = meanW(i)
       val bm = Map.newBuilder[String, DenseVector[Double]]
       val xm = Map.newBuilder[String, DenseMatrix[Double]]
-      subs.foreach { case (nm, _, _) =>
-        val xtx = p0Gram(i, nm) *:* (1.0 / mw)
-        val xty = p0Vec(i, "gy", nm) /:/ mw
+      subsP0.foreach { case (nm, _, _) =>
+        val xtx = p0.gram(i, s"gx_$nm") *:* (1.0 / mw)
+        val xty = p0.vec(i, s"gy_$nm") /:/ mw
         bm += nm -> (xtx \ xty)
         xm += nm -> inv(xtx /:/ nC(i).toDouble)
       }
@@ -346,12 +215,8 @@ private[did] object DistributedRc {
           Moment(s"m1_$j", wD * col("pp") * xj(j)),
           Moment(s"m2_$j", wD * (one - col("pp")) * xj(j))))
     }
-    val momRows = timed("moments") {
-      val aggs = moments.map(m => sum(m.c).as(m.name))
-      CellConsts.withConsts(lf, live, constants(Nil)).groupBy("cell")
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => r.getInt(0) -> r).toMap
-    }
+    val momRows = perCell(CellConsts.withConsts(lf, live, constants(Nil)),
+      moments.map(m => sum(m.c).as(m.name)))
     val momIdx = moments.map(_.name).zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     def mom(i: Int, name: String): Double =
       momRows(i).getDouble(momIdx(name)) / nC(i)
@@ -510,11 +375,6 @@ private[did] object DistributedRc {
         infTreat - infCont + nuis
     }
 
-    // Materialize the IF table off the cached `lf` before dropping it —
-    // the caller's persist of ifTable is lazy, so unpersisting first
-    // would force one more uncached grid-join execution. The
-    // materializing action doubles as the analytic-SE aggregation
-    // (sum of squared IFs per cell), so the caller pays no extra pass.
     // rowid-level shuffle ahead: back to data-sized partitioning (also
     // inherited by the bootstrap's downstream scans of ifRows)
     shuffleNarrow.restore()
@@ -523,17 +383,10 @@ private[did] object DistributedRc {
     // unbalanced-panel-as-RC regime rowid := unit id, so a unit's pre-
     // and post-period rows in the same cell must SUM into one
     // unit-level IF entry (sum(inf^2) SEs depend on it).
-    val ifRows = CellConsts.withConsts(lf, live, cdf)
-      .select(col("rowid"), col("cell"), infCol.as("inf"))
-      .groupBy("rowid", "cell").agg(sum("inf").as("inf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seSS = Array.fill(nCells)(0.0)
-    timed("if+se")(
-      ifRows.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
-        .collect().foreach(r => seSS(r.getInt(0)) = r.getDouble(1)))
-    lf.unpersist()
-
-    (att, post, skipped, ifRows, Some(seSS))
+    finishIf(lf, shuffleNarrow, att, post, skipped,
+      CellConsts.withConsts(lf, live, cdf)
+        .select(col("rowid"), col("cell"), infCol.as("inf"))
+        .groupBy("rowid", "cell").agg(sum("inf").as("inf")))
     } finally shuffleNarrow.restore() // no-op unless an exception skipped it
   }
 }

@@ -62,9 +62,10 @@ object PreTest {
     * "if |tlist|·|glist| explodes, fail fast"): the Wald path holds a
     * dense K_pre² covariance and pays a K_pre³ solve ON THE DRIVER.
     * 5000 pre-cells = 200 MB dense + ~10¹¹ flops — past that the right
-    * fix is a coarser grid, not a bigger driver. The GridRehearsal
-    * exponents (≤0.10 in K at 10.8× growth) cover the sane regime;
-    * this guard covers the insane one. */
+    * fix is a coarser grid, not a bigger driver. The round-8 grid
+    * measurement in BENCH_NOTES.md (K 36 -> 390 cells at fixed rows,
+    * Wald wall-time exponent 0.10 in K) covers the sane regime; this
+    * guard covers the insane one. */
   private val MaxPreCells = 5000
 
   def wald(f: AttGtFit): WaldResult = {

@@ -37,6 +37,11 @@ object Graph {
     * `maxDriverEdges = 0` (the spec hook). */
   val MaxDriverEdges: Long = 1L << 20
 
+  /** The one driver-tier gate: `n` rows fit under `cap`. A cap of 0
+    * always forces the distributed loop, even on an empty edge or node
+    * set. */
+  private def driverTier(n: Long, cap: Long): Boolean = cap > 0 && n <= cap
+
   private def r8(x: Double): Double =
     BigDecimal(x).setScale(8, BigDecimal.RoundingMode.HALF_UP).toDouble
 
@@ -111,7 +116,7 @@ object Graph {
     // driver tier (see MaxDriverEdges): the count doubles as the
     // persist materializer the first round's action used to provide
     val nEdges = sym.count()
-    if (nEdges <= maxDriverEdges) {
+    if (driverTier(nEdges, maxDriverEdges)) {
       val (s, d) = collectSym(sym)
       sym.unpersist()
       val spark = edges.sparkSession
@@ -297,7 +302,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // driver tier (see MaxDriverEdges): simulate the rounds locally
     val nEdges = sym.count()
-    if (nEdges <= maxDriverEdges) {
+    if (driverTier(nEdges, maxDriverEdges)) {
       val (s, d) = collectSym(sym)
       sym.unpersist()
       val spark = edges.sparkSession
@@ -579,8 +584,8 @@ object Graph {
     // implemented for strings here); node frame shares the edge cap
     val labelIsString = nodes.schema(labelCol).dataType ==
       org.apache.spark.sql.types.StringType
-    if (labelIsString && sym.count() <= maxDriverEdges &&
-        nodes.count() <= maxDriverEdges) {
+    if (labelIsString && driverTier(sym.count(), maxDriverEdges) &&
+        driverTier(nodes.count(), maxDriverEdges)) {
       val seedRows = nodes
         .select(col(idCol).cast("long").as("id"), col(labelCol))
         .collect()
@@ -789,7 +794,7 @@ object Graph {
     val sym = TrackedCaches.persist(symEdges(edges, aCol, bCol)
       .distinct())
     // driver tier (see MaxDriverEdges): peel locally
-    if (sym.count() <= maxDriverEdges) {
+    if (driverTier(sym.count(), maxDriverEdges)) {
       val (s, d) = collectSym(sym)
       val spark = edges.sparkSession
       import spark.implicits._
@@ -917,7 +922,7 @@ object Graph {
     // driver tier (see MaxDriverEdges): the hub cap above already ran
     // distributed (its detection aggregate needs the full edge set);
     // only the sequential peel rounds tier down
-    if (aliveN <= maxDriverEdges) {
+    if (driverTier(aliveN, maxDriverEdges)) {
       val rows = alive.select(col("lo"), col("hi")).collect()
       val lo = new Array[Long](rows.length)
       val hi = new Array[Long](rows.length)
@@ -1238,7 +1243,8 @@ object Graph {
     // driver tier (see MaxDriverEdges): seed count is node-bounded but
     // independent of the edge set, so it shares the same cap
     val nEdges = sym.count()
-    if (nEdges <= maxDriverEdges && nS <= maxDriverEdges) {
+    if (driverTier(nEdges, maxDriverEdges) &&
+        driverTier(nS, maxDriverEdges)) {
       val (s, d) = collectSym(sym)
       val seedArr = seeds.collect().map(_.getLong(0))
       sym.unpersist(); seeds.unpersist()

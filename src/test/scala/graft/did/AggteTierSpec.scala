@@ -1,7 +1,5 @@
 package graft.did
 
-import org.apache.spark.SparkListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -127,28 +125,7 @@ class AggteTierSpec extends AnyFunSuite with SparkSpec {
     fit.unpersist(); pp.unpersist()
   }
 
-  /** Spark jobs `body` submits, counted by job group. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"aggte-jobs-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == tag))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(tag, tag)
-    try {
-      val r = body
-      SparkListenerDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
+  private def jobsOf[T](body: => T): (T, Int) = SparkJobs.of(spark)(body)
 
   test("driver tier: prepare runs 3 Spark jobs, each family none") {
     val pp = Preprocess.run(unbalanced(200),

@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.{DataType, LongType, StringType,
+  StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -139,6 +143,36 @@ class GraphTierSpec extends AnyFunSuite with Matchers with SparkSpec {
         withClue(s"trial $trial nodes=$nodes (edges=$edges): ") {
           run(Graph.MaxDriverEdges) shouldBe run(0L)
         }
+      }
+    }
+  }
+
+  test("maxDriverEdges = 0 takes the distributed loop even on an empty " +
+      "graph") {
+    def emptyFrame(fields: (String, DataType)*) =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(fields.map { case (n, t) => StructField(n, t) }))
+    // RDD-backed inputs, so only a driver-tier result (built from
+    // driver arrays) has nothing but LocalRelation leaves
+    val edges = emptyFrame("id_a" -> LongType, "id_b" -> LongType)
+    val nodes = emptyFrame("id" -> LongType, "label" -> StringType)
+    def driverBuilt(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation])
+    Seq[(String, Long => DataFrame)](
+      "connectedComponents" -> (cap =>
+        Graph.connectedComponents(edges, maxDriverEdges = cap)),
+      "pageRank" -> (cap => Graph.pageRank(edges, maxDriverEdges = cap)),
+      "kCore" -> (cap => Graph.kCore(edges, k = 2, maxDriverEdges = cap)),
+      "kTruss" -> (cap => Graph.kTruss(edges, k = 3, maxDriverEdges = cap)),
+      "labelPropagation" -> (cap =>
+        Graph.labelPropagation(nodes, edges, maxDriverEdges = cap))
+    ).foreach { case (op, run) =>
+      withClue(s"$op: ") {
+        driverBuilt(run(Graph.MaxDriverEdges)) shouldBe true
+        val forced = run(0L)
+        driverBuilt(forced) shouldBe false
+        forced.count() shouldBe 0L
       }
     }
   }
